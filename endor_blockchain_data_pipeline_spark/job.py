@@ -2,8 +2,10 @@
 
 The driver loop analog of ``SparkApplication.runDriver`` +
 ``BlockSummaryPipeline.run`` (``infra/spark/SparkApplication.scala:49-88``,
-``blocksummaries/BlockSummaryPipeline.scala:55-135``): each ``run_batch`` is
-one micro-batch; ``run_to_watermark`` tails the feed until caught up.
+``blocksummaries/BlockSummaryPipeline.scala:55-135``): ``run_to_watermark``
+tails the feed until caught up, one ordered-commit loop for every write mode
+and pipeline depth; ``run_batch`` applies one range with the same stage,
+commit and post-commit steps.
 Exactly-once: a batch id derives from its (lo, hi] LSN range; committed ids
 are skipped on replay (the reference's delete-inbox + `_SUCCESS` dance,
 strengthened to atomic manifest commits).
@@ -15,7 +17,9 @@ the bottom drives the same loop locally.
 
 from __future__ import annotations
 
+import concurrent.futures as cf
 import time
+from collections import deque
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +29,8 @@ from endor_blockchain_data_pipeline_spark.functions.decode import (
     decode_changes_arrow,
 )
 from endor_blockchain_data_pipeline_spark.lineage import LineageLog
+# steps resolved on the module at call time, so a patched step applies everywhere
+from endor_blockchain_data_pipeline_spark.operators import merge
 from endor_blockchain_data_pipeline_spark.operators.merge import lww_reduce, merge_batch
 from endor_blockchain_data_pipeline_spark.sources.checkpoint import Checkpoint
 from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
@@ -69,23 +75,11 @@ class CDCJob:
         batch_id = self.batch_id_for(lo, hi)
         if self.checkpoint.is_committed(batch_id):
             return None
-        raw = ranged_scan(self.wal, lo, hi)
         manifest = merge_batch(
-            self.table, raw, batch_id, lo, hi,
-            salted=self.salted, salt_n=self.salt_n, lineage=self.lineage,
-            mode=self.write_mode, decode_fn=self.decode,
-            # dense-feed row bound: the LSN range width caps the winner-set
-            # size, so the reduce can pick broadcast vs window safely.
-            est_rows=hi - lo,
+            self.table, ranged_scan(self.wal, lo, hi), batch_id, lo, hi,
+            mode=self.write_mode, lineage=self.lineage, **self._stage_kw(lo, hi),
         )
-        if self.write_mode == "mor":
-            from endor_blockchain_data_pipeline_spark.operators.merge import (
-                compact_buckets,
-            )
-
-            due = self.table.multi_gen_buckets(self.compact_threshold)
-            compact_buckets(self.table, self.spark, f"compact-{batch_id}", due)
-        self.checkpoint.record(batch_id, hi)
+        self._after_commit(batch_id, hi)
         return manifest
 
     def run_to_watermark(
@@ -100,94 +94,65 @@ class CDCJob:
         latest manifest's lsn_hi, so a restarted job continues exactly where
         the last atomic commit left off.
 
-        ``pipeline``: in MoR mode, stage up to this many batches concurrently
-        (their data writes are independent) while commits stay strictly
-        ordered — driver-side serial time (planning, codegen, broadcast
-        build, commit bookkeeping) of batch k+1 overlaps batch k's cluster
-        work. Defaults to 2 for MoR, 1 (serial) for CoW — CoW batch k+1 must
-        read the state k wrote, so it cannot pipeline.
+        One ordered-commit loop for every mode: up to ``pipeline`` batches
+        stage at once on a thread pool while the caller's thread commits
+        them strictly in batch order — driver-side serial time (planning,
+        codegen, broadcast build, commit bookkeeping) of batch k+1 overlaps
+        batch k's cluster work. MoR defaults to depth 2 (appends are
+        independent until commit); CoW always runs at depth 1, because batch
+        k+1 must read the state k wrote.
         """
-        if pipeline is None:
-            pipeline = 2 if self.write_mode == "mor" else 1
+        depth = max(1, 2 if pipeline is None else pipeline) if self.write_mode == "mor" else 1
         lo = self.checkpoint.last_lsn()
         hi_max = source_max(self.wal)
-        ranges: list[tuple[int, int]] = []
-        while lo < hi_max:
-            hi = min(lo + batch_size, hi_max)
-            ranges.append((lo, hi))
-            lo = hi
-            if limit_batches is not None and len(ranges) >= limit_batches:
-                break
-
-        if pipeline <= 1 or self.write_mode != "mor" or len(ranges) <= 1:
-            results = []
-            for lo, hi in ranges:
-                m = self.run_batch(lo, hi)
-                if m is not None:
-                    results.append(m)
-            return results
-        return self._run_pipelined(ranges, pipeline)
-
-    def _run_pipelined(self, ranges: list[tuple[int, int]], depth: int) -> list[dict]:
-        """MoR pipelining: concurrent staging, ordered commits."""
-        import concurrent.futures as cf
-
-        from endor_blockchain_data_pipeline_spark.operators.merge import (
-            commit_staged_batch,
-            compact_buckets,
-            stage_batch_mor,
-        )
-
         results: list[dict] = []
-        with cf.ThreadPoolExecutor(max_workers=depth) as pool:
-            futures: list[tuple[int, int, str, cf.Future | None]] = []
-            for lo, hi in ranges:
-                batch_id = self.batch_id_for(lo, hi)
-                if self.checkpoint.is_committed(batch_id):
-                    futures.append((lo, hi, batch_id, None, None))
-                    continue
-                raw = ranged_scan(self.wal, lo, hi)
-                fut = pool.submit(
-                    stage_batch_mor, self.table, raw, batch_id,
-                    salted=self.salted, salt_n=self.salt_n, decode_fn=self.decode,
-                    est_rows=hi - lo,
+        staging: deque = deque()
+
+        def commit_oldest() -> None:
+            batch_id, lo, hi, fut = staging.popleft()
+            staged, commit_kw = fut.result()
+            results.append(
+                merge.commit_staged_batch(
+                    self.table, staged, batch_id, lo, hi,
+                    lineage=self.lineage, **commit_kw,
                 )
-                futures.append((lo, hi, batch_id, fut, time.time()))
-                # Ordered commit of everything that must land before we are
-                # allowed to run more than `depth` stages ahead.
-                while len([f for _, _, _, f, _ in futures if f is not None and not f.done()]) >= depth:
-                    self._drain_one(futures, results)
-            while futures:
-                self._drain_one(futures, results)
-        # compaction after the pipeline drains (touches committed state)
-        due = self.table.multi_gen_buckets(self.compact_threshold)
-        compact_buckets(self.table, self.spark, f"compact-{ranges[-1][1]}", due)
+            )
+            self._after_commit(batch_id, hi)
+
+        with cf.ThreadPoolExecutor(max_workers=depth) as pool:
+            n = 0
+            while lo < hi_max and (limit_batches is None or n < limit_batches):
+                hi = min(lo + batch_size, hi_max)
+                batch_id = self.batch_id_for(lo, hi)
+                if not self.checkpoint.is_committed(batch_id):
+                    fut = pool.submit(
+                        merge.stage_batch, self.table, ranged_scan(self.wal, lo, hi),
+                        batch_id, self.write_mode, **self._stage_kw(lo, hi),
+                    )
+                    staging.append((batch_id, lo, hi, fut))
+                    if len(staging) == depth:
+                        commit_oldest()
+                lo, n = hi, n + 1
+            while staging:
+                commit_oldest()
         return results
 
-    def _drain_one(self, futures: list, results: list) -> None:
-        from endor_blockchain_data_pipeline_spark.operators.merge import (
-            commit_staged_batch,
-        )
+    def _stage_kw(self, lo: int, hi: int) -> dict:
+        # dense-feed row bound: the LSN range width caps the winner-set
+        # size, so the reduce can pick broadcast vs shuffle-hash safely.
+        return {
+            "salted": self.salted, "salt_n": self.salt_n,
+            "decode_fn": self.decode, "est_rows": hi - lo,
+        }
 
-        lo, hi, batch_id, fut, t_sub = futures.pop(0)
-        if fut is None:
-            return
-        staged = fut.result()
-        m = commit_staged_batch(
-            self.table, staged, batch_id, lo, hi,
-            mode="mor", lineage=self.lineage, t_start=t_sub,
-        )
-        self.checkpoint.record(batch_id, hi)
-        results.append(m)
-        # Compaction runs on the commit thread (manifest mutations stay
-        # serialized) while later batches keep staging in the pool.
+    def _after_commit(self, batch_id: str, hi: int) -> None:
+        """Post-commit step of every batch: fold the buckets that reached
+        ``compact_threshold`` generations, then advance the offsets cache.
+        Runs on the committing thread, so manifest mutations stay serialized
+        while later batches keep staging."""
         due = self.table.multi_gen_buckets(self.compact_threshold)
-        if due:
-            from endor_blockchain_data_pipeline_spark.operators.merge import (
-                compact_buckets,
-            )
-
-            compact_buckets(self.table, self.spark, f"compact-{batch_id}", due)
+        merge.compact_buckets(self.table, self.spark, f"compact-{batch_id}", due)
+        self.checkpoint.record(batch_id, hi)
 
     def read_state(self) -> DataFrame:
         """Current logical table state (tombstones dropped, internals hidden)."""

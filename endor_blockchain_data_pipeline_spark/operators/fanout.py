@@ -32,10 +32,11 @@ import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
+from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
 from endor_blockchain_data_pipeline_spark.operators.merge import (
-    changes_to_state,
     commit_staged_batch,
     lww_winner_rows,
+    winner_state,
 )
 from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable, bucket_expr
 
@@ -84,7 +85,7 @@ def fanout_batch(
     state_table: ManifestTable,
     tool_table: ManifestTable,
     stats_table: ManifestTable,
-    decode_fn=None,
+    decode_fn=decode_changes,
     salted: bool = False,
     salt_n: int = 16,
     lineage=None,
@@ -95,8 +96,6 @@ def fanout_batch(
     Returns {"state": manifest|None, "tool": ..., "stats": ...} — None for
     sinks that had already committed this batch (idempotent replay skip).
     """
-    from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
-
     pending = {
         name: t
         for name, t in (
@@ -108,24 +107,21 @@ def fanout_batch(
     if not pending:
         return results
 
-    decode = decode_fn or decode_changes
     winners = lww_winner_rows(raw, salted=salted, salt_n=salt_n, est_rows=est_rows)
-    decoded = decode(winners).persist(StorageLevel.MEMORY_AND_DISK)
+    decoded = decode_fn(winners).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         if "state" in pending:
-            new_state = changes_to_state(decoded, batch_id).withColumn(
-                "_bucket", bucket_expr(state_table.bucket_key, state_table.n_buckets)
+            staged = state_table.stage(
+                winner_state(state_table, decoded, batch_id), batch_id
             )
-            staged = state_table.stage(new_state, batch_id)
             results["state"] = commit_staged_batch(
                 state_table, staged, batch_id, lsn_lo, lsn_hi,
                 mode="mor", lineage=lineage,
             )
         if "tool" in pending:
-            tool_state = changes_to_state(tool_calls_view(decoded), batch_id).withColumn(
-                "_bucket", bucket_expr(tool_table.bucket_key, tool_table.n_buckets)
+            staged = tool_table.stage(
+                winner_state(tool_table, tool_calls_view(decoded), batch_id), batch_id
             )
-            staged = tool_table.stage(tool_state, batch_id)
             results["tool"] = commit_staged_batch(
                 tool_table, staged, batch_id, lsn_lo, lsn_hi, mode="mor"
             )

@@ -672,10 +672,13 @@ class LiveCuration:
                 "text_hash"
             ),
             F.coalesce("_del", F.lit(False)).alias("_is_del"),
-            # write only rows that changed (or are brand new / deleted)
-            (
-                F.col("_b_th").isNull()
-                | F.coalesce("_del", F.lit(False))
+            # write only rows that changed: without an earlier verdict, only
+            # a conv that has a transcript now (one inserted and deleted
+            # inside this batch has neither); else a deleted conv or one
+            # whose flags or text changed
+            F.when(F.col("_b_th").isNull(), is_new)
+            .otherwise(
+                F.coalesce("_del", F.lit(False))
                 | ~F.struct(qual, exact, near, dec).eqNullSafe(
                     F.struct(
                         F.coalesce("_b_quality_pass", F.lit(False)),
@@ -685,7 +688,8 @@ class LiveCuration:
                     )
                 )
                 | ~F.col("_n_th").eqNullSafe(F.col("_b_th")) & is_new
-            ).alias("_dirty"),
+            )
+            .alias("_dirty"),
         )
         if exact_fut is not None:
             # the exact commit must land before the verdicts commit (the

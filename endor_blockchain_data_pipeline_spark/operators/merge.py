@@ -5,6 +5,17 @@ the one with the greatest ``(lsn, mutation_ts)``; ``op='delete'`` winners
 become tombstones (kept internally until compaction so late replays cannot
 resurrect dropped rows).
 
+One apply path per batch: ``stage_batch`` (the one place that picks the
+write mode's stage step) writes the batch's files unpublished, then
+``commit_staged_batch`` publishes them with one atomic manifest commit.
+Both stage steps reduce the raw WAL slice to per-key winners
+(``lww_winner_rows``) and decode only those. ``stage_batch_mor`` appends
+them as a new file generation of their buckets; ``stage_batch_cow`` runs a
+discovery job for the affected buckets and rewrites them as the LWW merge of
+their current state and the winners (``ManifestTable.merge_generations``).
+``merge_batch`` is stage + commit; ``CDCJob`` runs the same steps in one
+ordered-commit loop, where serial apply is pipeline depth 1.
+
 Reference parity: the reference's per-group argmin/argmax UDAFs
 (``ratesaggregation/OpenRateAggregator.scala:9-38``,
 ``CloseRateAggregator.scala:9-38``) are exactly Spark's built-in
@@ -23,9 +34,10 @@ reduction is provided (``lww_reduce_salted``) for engines where partial
 aggregation is unavailable (e.g. high-cardinality payload aggregation or
 collect_list-style merges); tests assert both produce identical results.
 
-Scale: merge cost per batch is O(changed keys + current rows of affected
-buckets). Bucket pruning (manifest file lists) keeps the read side narrow;
-AQE skew-join splitting covers residual join skew.
+Scale: merge cost per batch is O(changed keys) for MoR and O(changed keys +
+current rows of affected buckets) for CoW. Bucket pruning (manifest file
+lists) keeps the read side narrow; AQE skew-join splitting covers residual
+join skew.
 """
 
 from __future__ import annotations
@@ -35,6 +47,7 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
 from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable, bucket_expr
 
 # Columns describing a decoded change row (user payload part).
@@ -45,12 +58,8 @@ KEY_COLS = ["conv_id", "turn_idx"]
 # broadcast than the state-merge's full rows, so it gets its own bound:
 # 32M longs ~= 256MB serialized, the executor-comfort ceiling documented
 # below. Beyond it the join-back switches to shuffle-hash (never a feed
-# sort). Overridable for tests / smaller executors.
-import os as _os
-
-WINNER_BROADCAST_ROW_LIMIT = int(
-    _os.environ.get("ENDOR_WINNER_BROADCAST_ROW_LIMIT", 32_000_000)
-)
+# sort).
+WINNER_BROADCAST_ROW_LIMIT = 32_000_000
 
 
 def lww_reduce(changes: DataFrame, key_cols: list[str] = KEY_COLS) -> DataFrame:
@@ -187,39 +196,100 @@ def changes_to_state(reduced: DataFrame, batch_id: str) -> DataFrame:
     )
 
 
-def lww_state_merge(
-    combined: DataFrame, key_cols: list[str] = KEY_COLS, strategy: str = "broadcast"
-) -> DataFrame:
-    """LWW across state generations (current ∪ new).
-
-    ``strategy="broadcast"``: narrow winner selection on max(_lsn) then
-    join-back on the globally-unique _lsn — same HashAggregate-friendly
-    shape as ``lww_winner_rows`` (no string buffers). Safe while the winner
-    set fits an executor (one long per key).
-    ``strategy="window"``: row_number per key over (_lsn, _mts) desc — one
-    shuffle, nothing broadcast; the scale path when the affected key count
-    is large or unknown (mirrors ``ManifestTable.read``'s strategy switch).
-    """
-    if strategy == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col("_lsn").desc(), F.col("_mts").desc()
-        )
-        return (
-            combined.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    winners = (
-        combined.select(*key_cols, "_lsn")
-        .groupBy(*key_cols)
-        .agg(F.max("_lsn").alias("_win_lsn"))
-        .select("_win_lsn")
+def winner_state(table: ManifestTable, decoded: DataFrame, batch_id: str) -> DataFrame:
+    """Decoded per-key winners -> ``table``'s bucketed internal state rows."""
+    return changes_to_state(decoded, batch_id).withColumn(
+        "_bucket", bucket_expr(table.bucket_key, table.n_buckets)
     )
-    return combined.join(
-        F.broadcast(winners), combined["_lsn"] == winners["_win_lsn"], "inner"
-    ).drop("_win_lsn")
+
+
+def stage_batch_mor(
+    table: ManifestTable,
+    raw: DataFrame,
+    batch_id: str,
+    salted: bool = False,
+    salt_n: int = 16,
+    decode_fn=decode_changes,
+    est_rows: int | None = None,
+) -> tuple[dict, dict]:
+    """MoR stage step: the batch's winners become a new file generation of
+    their buckets. Appends never read current state, so MoR batches stage
+    concurrently; their commits still land in order. No discovery job: the
+    staged directory listing names the appended buckets, and per-bucket
+    stats come from the parquet footers."""
+    winners = decode_fn(
+        lww_winner_rows(raw, salted=salted, salt_n=salt_n, est_rows=est_rows)
+    )
+    return table.stage(winner_state(table, winners, batch_id), batch_id), {}
+
+
+def stage_batch_cow(
+    table: ManifestTable,
+    raw: DataFrame,
+    batch_id: str,
+    salted: bool = False,
+    salt_n: int = 16,
+    decode_fn=decode_changes,
+    est_rows: int | None = None,
+) -> tuple[dict, dict]:
+    """CoW stage step: the affected buckets are rewritten as the LWW merge of
+    their current state and the batch's winners, so reads always see one
+    generation. Batch k+1 reads the state batch k wrote, so CoW batches
+    cannot stage ahead of the previous commit.
+
+    1. **bucket discovery** (cheap job): per-bucket change stats off the
+       feed columns (conv_id/op/lsn) — Catalyst prunes the payload decode
+       from this scan. Yields the affected buckets for manifest-level read
+       pruning AND the per-bucket lineage rows.
+    2. **the merge job** (one Spark action): within-batch winners -> decode
+       -> union with the snapshot read of ONLY the affected buckets
+       (tombstones included) -> ``merge_generations`` -> bucketed write.
+    """
+    bucket_rows = (
+        raw.select(
+            bucket_expr(table.bucket_key, table.n_buckets).alias("_bucket"), "op", "lsn"
+        )
+        .groupBy("_bucket")
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("n_deletes"),
+            F.min("lsn").alias("min_lsn"),
+            F.max("lsn").alias("max_lsn"),
+        )
+        .collect()
+    )
+    affected = [r["_bucket"] for r in bucket_rows]
+    n_changes = sum(r["n_rows"] for r in bucket_rows)
+    winners = decode_fn(
+        lww_winner_rows(raw, salted=salted, salt_n=salt_n, est_rows=est_rows)
+    )
+    merged = winner_state(table, winners, batch_id)
+    m = table.manifest()
+    if m is not None:
+        current = table.read(
+            raw.sparkSession, buckets=affected, with_internal=True, version=m["version"]
+        ).withColumn("_bucket", bucket_expr(table.bucket_key, table.n_buckets))
+        merged = table.merge_generations(
+            current.unionByName(merged, allowMissingColumns=True),
+            m, {str(b) for b in affected}, extra_rows=n_changes,
+        )
+    commit_kw = {"affected": affected, "bucket_rows": bucket_rows, "n_changes": n_changes}
+    return table.stage(merged, batch_id), commit_kw
+
+
+def stage_batch(
+    table: ManifestTable, raw: DataFrame, batch_id: str, mode: str = "cow", **kw
+) -> tuple[dict, dict]:
+    """Stage one raw WAL batch with ``mode``'s stage step (``"mor"`` or
+    ``"cow"``; ``kw``: salted, salt_n, decode_fn, est_rows).
+
+    Returns ``(staged, commit_kw)``: publish with
+    ``commit_staged_batch(table, staged, batch_id, lo, hi, **commit_kw)``.
+    The batch's ``apply_sec`` is measured from here to its commit."""
+    t_start = time.time()
+    stage = stage_batch_mor if mode == "mor" else stage_batch_cow
+    staged, commit_kw = stage(table, raw, batch_id, **kw)
+    return staged, {**commit_kw, "mode": mode, "t_start": t_start}
 
 
 def merge_batch(
@@ -232,117 +302,35 @@ def merge_batch(
     salt_n: int = 16,
     lineage=None,
     mode: str = "cow",
-    decode_fn=None,
+    decode_fn=decode_changes,
     est_rows: int | None = None,
 ) -> dict:
-    """Apply one decoded WAL batch to the table (key-partitioned MERGE).
+    """Apply one raw WAL batch to the table: ``stage_batch`` then
+    ``commit_staged_batch``.
 
     ``mode="cow"`` (copy-on-write): affected buckets are read, LWW-merged
     with the batch and fully rewritten — reads always see compact state.
     ``mode="mor"`` (merge-on-read): the batch's per-key winners are appended
     as a new file generation of their buckets — apply cost is O(changes)
     instead of O(changes + affected-bucket state); readers merge generations
-    (bounded by compaction, see ``compact_buckets``). At 10^10 events with
-    table >> batch, MoR is the scale path — identical final semantics
-    (property-tested against CoW).
+    (bounded by compaction, see ``compact_buckets``). Identical final
+    semantics (property-tested against CoW).
 
-    1. **bucket discovery** (cheap job): per-bucket change stats straight off
-       the feed columns (conv_id/op/lsn only) — Catalyst prunes the payload
-       decode + normalization out of this scan entirely, so it reads three
-       parquet columns and nothing else. Yields the affected-bucket list for
-       manifest-level read pruning AND the per-bucket lineage rows.
-    2. **the merge job** (all heavy work, ONE Spark action): decode+normalize
-       -> within-batch LWW reduce -> union with the snapshot-read of ONLY the
-       affected buckets (tombstones included) -> per-key max_by(lsn, mts)
-       -> bucketed parquet write. No persist, no second pass: every row is
-       decoded exactly once, inside the same whole-stage pipeline that writes.
-    3. atomic manifest commit replacing the affected buckets.
-
-    Skew: both reduces are hash aggregates -> map-side partial aggregation
-    collapses hot conversations before the shuffle. ``salted=True`` adds the
-    explicit two-phase reduction for payloads too wide to partial-aggregate.
+    ``decode_fn`` decodes the winner rows (default ``decode_changes``).
+    ``est_rows``: an upper bound on the batch's row count; it picks the
+    winner join-back strategy (``lww_winner_rows``). Skew: the reduce is a
+    hash aggregate, so map-side partial aggregation collapses hot
+    conversations before the shuffle; ``salted=True`` adds the explicit
+    two-phase reduction.
 
     Returns the commit manifest dict (timing in stats).
     """
-    import os as _os
-
-    _timing = _os.environ.get("ENDOR_MERGE_TIMING") == "1"
-    t0 = time.time()
-
-    # -- 1. bucket discovery (CoW only) -------------------------------------
-    # CoW must know the affected buckets BEFORE planning the merge (it reads
-    # exactly those buckets' current state). The discovery scan touches only
-    # (conv_id, op, lsn) — Catalyst prunes the payload decode entirely.
-    # MoR needs no discovery job at all: the commit's own directory listing
-    # identifies the appended buckets, and per-bucket stats come free from
-    # the parquet footers.
-    bucket_rows = None
-    affected = None
-    n_changes = None
-    if mode != "mor":
-        bucket_rows = (
-            changes.select(
-                bucket_expr(table.bucket_key, table.n_buckets).alias("_bucket"),
-                "op",
-                "lsn",
-            )
-            .groupBy("_bucket")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("n_deletes"),
-                F.min("lsn").alias("min_lsn"),
-                F.max("lsn").alias("max_lsn"),
-            )
-            .collect()
-        )
-        affected = [r["_bucket"] for r in bucket_rows]
-        n_changes = sum(r["n_rows"] for r in bucket_rows)
-        if _timing:
-            print(f"[merge {batch_id}] discovery: {time.time()-t0:.2f}s", flush=True)
-    t1 = time.time()
-
-    # -- 2. one fused job: reduce (narrow) -> decode winners -> merge -> write
-    if decode_fn is not None:
-        # Fast path: ``changes`` is the RAW feed slice. Narrow winner
-        # selection touches only (key, lsn, ts); the payload decode +
-        # normalization run on WINNER rows only.
-        winner_raw = lww_winner_rows(
-            changes, salted=salted, salt_n=salt_n, est_rows=est_rows
-        )
-        reduced = decode_fn(winner_raw)
-    else:
-        # ``changes`` already decoded (compat path for pre-decoded feeds).
-        reduced = (
-            lww_reduce_salted(changes, salt_n=salt_n) if salted else lww_reduce(changes)
-        )
-    new_state = changes_to_state(reduced, batch_id).withColumn(
-        "_bucket", bucket_expr(table.bucket_key, table.n_buckets)
+    staged, commit_kw = stage_batch(
+        table, changes, batch_id, mode,
+        salted=salted, salt_n=salt_n, decode_fn=decode_fn, est_rows=est_rows,
     )
-    if mode == "mor" or table.manifest() is None:
-        merged = new_state
-    else:
-        current = table.read(
-            table_spark(new_state), buckets=affected, with_internal=True
-        ).withColumn("_bucket", bucket_expr(table.bucket_key, table.n_buckets))
-        combined = current.unionByName(new_state, allowMissingColumns=True)
-        # Pick the merge strategy from manifest stats, like the read path:
-        # broadcast only when affected-state + batch rows provably fit.
-        m0 = table.manifest()
-        est = ManifestTable._selected_row_estimate(m0, {str(b) for b in affected})
-        small = (
-            est is not None
-            and n_changes is not None
-            and est + n_changes <= ManifestTable.MERGE_BROADCAST_ROW_LIMIT
-        )
-        merged = lww_state_merge(combined, strategy="broadcast" if small else "window")
-
-    staged = table.stage(merged, batch_id)
-    if _timing:
-        print(f"[merge {batch_id}] stage: {time.time()-t1:.2f}s", flush=True)
     return commit_staged_batch(
-        table, staged, batch_id, lsn_lo, lsn_hi,
-        affected=affected, bucket_rows=bucket_rows, n_changes=n_changes,
-        mode=mode, lineage=lineage, t_start=t0,
+        table, staged, batch_id, lsn_lo, lsn_hi, lineage=lineage, **commit_kw
     )
 
 
@@ -395,38 +383,6 @@ def commit_staged_batch(
             ]
         lineage.record_rows(rows, batch_id, lsn_lo, lsn_hi, apply_sec)
     return manifest
-
-
-def stage_batch_mor(
-    table: ManifestTable,
-    raw: DataFrame,
-    batch_id: str,
-    salted: bool = False,
-    salt_n: int = 16,
-    decode_fn=None,
-    est_rows: int | None = None,
-) -> dict:
-    """Stage (write, don't publish) one MoR batch — the pipelinable half.
-
-    MoR batches are mutually independent until the manifest commit (appends
-    never read current state), so several can stage concurrently; commits
-    then happen in order. CoW batches CANNOT pipeline: batch k+1's merge
-    reads the state written by k.
-    """
-    from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
-
-    decode = decode_fn or decode_changes
-    winner_raw = lww_winner_rows(raw, salted=salted, salt_n=salt_n, est_rows=est_rows)
-    reduced = decode(winner_raw)
-    new_state = changes_to_state(reduced, batch_id).withColumn(
-        "_bucket", bucket_expr(table.bucket_key, table.n_buckets)
-    )
-    return table.stage(new_state, batch_id)
-
-
-def table_spark(df: DataFrame):
-    """SparkSession of a DataFrame (4.x API)."""
-    return df.sparkSession
 
 
 def compact_buckets(

@@ -358,9 +358,9 @@ class ManifestTable:
 
     # ---------------- read path ----------------
 
-    # Above this many rows across the selected multi-generation buckets, the
-    # winner-LSN set is too big to broadcast (billions of keys => tens of GB
-    # => executor OOM); the read switches to the per-key window merge.
+    # Above this many rows across the merged buckets, the winner-LSN set is
+    # too big to broadcast (billions of keys => tens of GB => executor OOM);
+    # ``merge_generations`` (MoR read, CoW merge) switches to the window.
     MERGE_BROADCAST_ROW_LIMIT = 4_000_000
 
     def read(
@@ -433,62 +433,80 @@ class ManifestTable:
                 )
             merge_strategy = "none"  # auto on additive tables: no merge
         if merge_buckets and merge_strategy != "none":
-            key_cols = list(m.get("key_cols", self.key_cols))
-            strategy = merge_strategy
-            if not bool(m.get("unique_lsn", True)):
-                # The broadcast merge joins back on lsn VALUE equality,
-                # which is only sound when every row's _lsn is unique; this
-                # table declared per-batch lsns, so broadcast would keep
-                # every same-lsn row. Window is the only correct merge.
-                if strategy == "broadcast":
-                    raise ValueError(
-                        f"table {self.path} has non-unique _lsn "
-                        "(unique_lsn=false); the broadcast merge strategy "
-                        "is unsound for it"
-                    )
-                strategy = "window"
-            if strategy == "auto":
-                n_rows = self._selected_row_estimate(m, sel)
-                strategy = (
-                    "broadcast"
-                    if n_rows is not None and n_rows <= self.MERGE_BROADCAST_ROW_LIMIT
-                    else "window"
-                )
-            if strategy == "broadcast":
-                # Narrow winner selection (fixed-width HashAggregate, payload
-                # pruned from the scan) + join-back on the globally-unique
-                # _lsn. Commit protocol guarantees each (key, _lsn) appears
-                # in at most one generation (running-max watermark + batch
-                # registry), so the join-back is exactly-one-per-key.
-                winners = (
-                    df.select(*key_cols, "_lsn")
-                    .groupBy(*key_cols)
-                    .agg(F.max("_lsn").alias("_win_lsn"))
-                    .select("_win_lsn")
-                )
-                df = df.join(
-                    F.broadcast(winners), df["_lsn"] == winners["_win_lsn"], "inner"
-                ).drop("_win_lsn")
-            else:
-                # Bucket rows shuffle once by key; nothing is collected or
-                # broadcast, so the merge survives any table size. row_number
-                # (not rank) also collapses duplicate (key, _lsn) rows if an
-                # external writer ever violated the at-most-once invariant.
-                from pyspark.sql import Window
-
-                w = Window.partitionBy(*key_cols).orderBy(
-                    F.col("_lsn").desc(), F.col("_mts").desc()
-                )
-                df = (
-                    df.withColumn("_rn", F.row_number().over(w))
-                    .where(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
+            df = self.merge_generations(df, m, sel, merge_strategy)
         if not with_internal:
             df = df.where(~F.col("_deleted")).drop(*INTERNAL_COLS)
         if declared_schema is not None:
             df = coerce_to_declared(df, declared_schema)
         return df
+
+    def merge_generations(
+        self,
+        df: DataFrame,
+        m: dict,
+        sel: set[str] | None,
+        strategy: str = "auto",
+        extra_rows: int = 0,
+    ) -> DataFrame:
+        """LWW across file generations: one row per key, the one with the
+        greatest ``(_lsn, _mts)``. Shared by the MoR read and the CoW
+        "current ∪ batch" merge.
+
+        ``strategy``: ``"broadcast"``, ``"window"`` or ``"auto"`` (see
+        ``read``). ``"auto"`` broadcasts only while the manifest row count of
+        the selected buckets ``sel`` plus ``extra_rows`` (rows not in the
+        table yet, e.g. a CoW batch) fits ``MERGE_BROADCAST_ROW_LIMIT``.
+        """
+        key_cols = list(m.get("key_cols", self.key_cols))
+        if not bool(m.get("unique_lsn", True)):
+            # The broadcast merge joins back on lsn VALUE equality, which is
+            # only sound when every row's _lsn is unique; this table declared
+            # per-batch lsns, so broadcast would keep every same-lsn row.
+            # Window is the only correct merge.
+            if strategy == "broadcast":
+                raise ValueError(
+                    f"table {self.path} has non-unique _lsn "
+                    "(unique_lsn=false); the broadcast merge strategy "
+                    "is unsound for it"
+                )
+            strategy = "window"
+        if strategy == "auto":
+            n_rows = self._selected_row_estimate(m, sel)
+            strategy = (
+                "broadcast"
+                if n_rows is not None
+                and n_rows + extra_rows <= self.MERGE_BROADCAST_ROW_LIMIT
+                else "window"
+            )
+        if strategy == "broadcast":
+            # Narrow winner selection (fixed-width HashAggregate, payload
+            # pruned from the scan) + join-back on the globally-unique _lsn.
+            # Commit protocol guarantees each (key, _lsn) appears in at most
+            # one generation (running-max watermark + batch registry), so
+            # the join-back is exactly-one-per-key.
+            winners = (
+                df.select(*key_cols, "_lsn")
+                .groupBy(*key_cols)
+                .agg(F.max("_lsn").alias("_win_lsn"))
+                .select("_win_lsn")
+            )
+            return df.join(
+                F.broadcast(winners), df["_lsn"] == winners["_win_lsn"], "inner"
+            ).drop("_win_lsn")
+        # Rows shuffle once by key; nothing is collected or broadcast, so the
+        # merge survives any table size. row_number (not rank) also collapses
+        # duplicate (key, _lsn) rows if an external writer ever violated the
+        # at-most-once invariant.
+        from pyspark.sql import Window
+
+        w = Window.partitionBy(*key_cols).orderBy(
+            F.col("_lsn").desc(), F.col("_mts").desc()
+        )
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
+        )
 
     @staticmethod
     def _selected_row_estimate(m: dict, sel: set[str] | None) -> int | None:
@@ -562,21 +580,12 @@ class ManifestTable:
             df = df.withColumn("_bucket", bucket_expr(self.bucket_key, self.n_buckets))
 
         import concurrent.futures as _cf
-        import time as _time
 
-        _timing = os.environ.get("ENDOR_MERGE_TIMING") == "1"
-        _t0 = _time.time()
         commit_id = uuid.uuid4().hex[:12]
         commit_dir = os.path.join(self._data_dir, commit_id)
         if self.small_commit_rows > 0:
             staged = self._stage_driver(df, commit_dir)
             if staged is not None:
-                if _timing:
-                    print(
-                        f"[commit {batch_id}] driver-stage: "
-                        f"{_time.time()-_t0:.2f}s",
-                        flush=True,
-                    )
                 return staged
         # partitionBy gives dir-per-bucket; repartition by _bucket first so a
         # bucket's rows land in ONE file each. Pinning numPartitions to the
@@ -587,8 +596,6 @@ class ManifestTable:
         # mode: the commit dir is a fresh uuid per stage, so append==create;
         # append skips the dynamic-partition-overwrite commit bookkeeping.
         df.repartition(self.n_buckets, "_bucket").write.mode("append").partitionBy("_bucket").parquet(commit_dir)
-        if _timing:
-            print(f"[commit {batch_id}] write: {_time.time()-_t0:.2f}s", flush=True)
 
         # Collect the written files per bucket (driver-side listing of ONE
         # commit dir — bounded by this batch's bucket count, not table size).

@@ -25,7 +25,6 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
-from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
 from endor_blockchain_data_pipeline_spark.operators.merge import merge_batch
 from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
 
@@ -80,7 +79,7 @@ def stream_wal_to_table(
             return
         merge_batch(
             table, micro, batch_id, lo - 1, hi, mode=mode, lineage=lineage,
-            decode_fn=decode_changes,
+            est_rows=int(bounds["n"]),
         )
 
     return (

@@ -9,7 +9,7 @@ from endor_blockchain_data_pipeline_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("endor-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark("endor-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

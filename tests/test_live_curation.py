@@ -212,6 +212,50 @@ def test_cdc_driven_live_curation(spark, tmp_path):
     assert _rows(lc.verdicts_df()) == _rows(one)
 
 
+def test_insert_and_delete_in_one_batch_leaves_no_verdict(spark, tmp_path):
+    """A conversation inserted and deleted inside ONE CDC batch has no live
+    rows and no earlier verdict: the refresh must not write a verdict row
+    for it, so the live funnel equals the one-shot funnel. The first batch
+    creates the verdicts table, so the ghost's batch sees existing
+    verdicts."""
+    import datetime as dt
+    import json
+
+    from endor_blockchain_data_pipeline_spark.job import CDCJob
+    from endor_blockchain_data_pipeline_spark.operators.curate import (
+        curate_transcripts,
+    )
+    from endor_blockchain_data_pipeline_spark.operators.live_curation import (
+        LiveCuration,
+    )
+    from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
+
+    def insert(lsn, conv, text):
+        payload = {"role": "user", "text": text, "ts": "2024-01-01 00:00:00"}
+        return (lsn, "insert", conv, 0, json.dumps(payload).encode())
+
+    rows = [
+        insert(0, "c1", GOOD),
+        insert(1, "c2", GOOD2),
+        insert(2, "ghost", BASE),
+        (3, "delete", "ghost", 0, None),
+    ]
+    wal = spark.createDataFrame(
+        [(l, o, c, t, p, dt.datetime(2024, 1, 1, 0, 0, l)) for (l, o, c, t, p) in rows],
+        "lsn long, op string, conv_id string, turn_idx int, payload binary, ts timestamp",
+    )
+    table = ManifestTable(str(tmp_path / "t"), n_buckets=4)
+    lc = LiveCuration(spark, str(tmp_path / "cur"), table, **IDX)
+    # batches (-1, 1] = c1, c2 and (1, 3] = ghost inserted and deleted
+    commits = CDCJob(spark, table, wal, write_mode="mor").run_with_curation(2, lc)
+    assert len(commits) == 2
+
+    assert {r["conv_id"] for r in lc.verdicts_df().collect()} == {"c1", "c2"}
+    live = lc.funnel()
+    one_shot = curate_transcripts(spark, table.path, str(tmp_path / "os"), None)
+    assert live == {k: one_shot[k] for k in live}
+
+
 def test_string_id_index_pinned(spark, tmp_path):
     from endor_blockchain_data_pipeline_spark.operators.incremental_dedup import (
         DedupIndex,
